@@ -22,6 +22,7 @@ JSON documents) is routed to the Arrow-batched evaluator UDF in
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 from decimal import Decimal
 from fractions import Fraction
@@ -35,9 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jsonschema_spark.formats import SPARK_REGEX_FORMATS
+from jsonschema_spark.plans.cache import PlanCache
 from jsonschema_spark.registry import Registry
 
-__all__ = ["SparkPlanCompiler", "validate_dataframe", "VIOLATION_SCHEMA_DDL"]
+__all__ = ["SparkPlanCompiler", "compiled_plan", "validate_dataframe", "VIOLATION_SCHEMA_DDL"]
 
 VIOLATION_SCHEMA_DDL = (
     "array<struct<instance_path:string,keyword:string,code:string,params:map<string,string>>>"
@@ -353,9 +355,11 @@ class SparkPlanCompiler:
         is conservative (a false positive only splits a layer)."""
         batch: dict[str, Column] = {}
         for name, col in stages:
-            if batch and any(n in str(col) for n in batch):
-                df = df.withColumns(batch)
-                batch = {}
+            if batch:
+                text = str(col)  # one py4j round trip serializing the whole tree
+                if any(n in text for n in batch):
+                    df = df.withColumns(batch)
+                    batch = {}
             batch[name] = col
         return df.withColumns(batch) if batch else df
 
@@ -366,14 +370,13 @@ class SparkPlanCompiler:
         violations_col: str = "violations",
         valid_col: str = "valid",
     ) -> DataFrame:
-        """df + [violations, valid] columns. Narrow projections, no shuffle."""
-        stages: list[tuple[str, Column]] = []
-        v = self.violations_column(df.schema, stages=stages)
-        out = self.attach_stages(df, stages)
-        out = out.withColumn(violations_col, v).withColumn(
-            valid_col, F.size(F.col(violations_col)) == 0
+        """df + [violations, valid] columns. Narrow projections, no shuffle.
+        The plan comes from the application-scoped cache (``compiled_plan``)."""
+        return _apply_plan(
+            df, self.schema, assert_format=self.assert_format,
+            assert_content=self.assert_content,
+            violations_col=violations_col, valid_col=valid_col,
         )
-        return out.drop(*[n for n, _ in stages]) if stages else out
 
     # ---------------------------------------------------------------- internal
 
@@ -1292,6 +1295,65 @@ class SparkPlanCompiler:
             )
 
 
+_PLAN_CACHE = PlanCache()
+
+
+def compiled_plan(
+    spark,
+    df_schema: T.StructType,
+    schema: Any,
+    *,
+    assert_format: bool = True,
+    assert_content: bool = False,
+) -> tuple[Column, tuple[tuple[str, Column], ...]]:
+    """(violations Column, stages) for rows of ``df_schema``, compiled ONCE
+    per Spark application — like the reference's Compiler.Compile cache.
+
+    Key: (applicationId, ``json.dumps(schema, sort_keys=True)``,
+    ``df_schema.json()``, assert_format, assert_content); see plans/cache.py.
+    The tree is built over the default column-name-anchored root, so it
+    applies to any DataFrame with that schema. Attach ``stages`` with
+    ``SparkPlanCompiler.attach_stages`` before selecting the Column; their
+    names are fixed per entry, so drop them afterwards. A PlanCompileError
+    is raised on every call, never cached."""
+
+    def build():
+        plan = SparkPlanCompiler(
+            schema, assert_format=assert_format, assert_content=assert_content
+        )
+        stages: list[tuple[str, Column]] = []
+        violations = plan.violations_column(df_schema, stages=stages)
+        return violations, tuple(stages)
+
+    key = (
+        json.dumps(schema, sort_keys=True, default=str),
+        df_schema.json(),
+        assert_format,
+        assert_content,
+    )
+    return _PLAN_CACHE.get_or_build(spark, key, build)
+
+
+def _apply_plan(
+    df: DataFrame,
+    schema: Any,
+    *,
+    assert_format: bool,
+    assert_content: bool,
+    violations_col: str,
+    valid_col: str,
+) -> DataFrame:
+    violations, stages = compiled_plan(
+        df.sparkSession, df.schema, schema,
+        assert_format=assert_format, assert_content=assert_content,
+    )
+    out = SparkPlanCompiler.attach_stages(df, stages)
+    out = out.withColumn(violations_col, violations).withColumn(
+        valid_col, F.size(F.col(violations_col)) == 0
+    )
+    return out.drop(*[n for n, _ in stages]) if stages else out
+
+
 def validate_dataframe(
     df: DataFrame,
     schema: Any,
@@ -1300,7 +1362,9 @@ def validate_dataframe(
     valid_col: str = "valid",
     assert_format: bool = True,
 ) -> DataFrame:
-    """One-shot: attach violations + valid columns for a JSON Schema."""
-    return SparkPlanCompiler(schema, assert_format=assert_format).apply(
-        df, violations_col=violations_col, valid_col=valid_col
+    """One-shot: attach violations + valid columns for a JSON Schema (the
+    compile is shared per application, see ``compiled_plan``)."""
+    return _apply_plan(
+        df, schema, assert_format=assert_format, assert_content=False,
+        violations_col=violations_col, valid_col=valid_col,
     )

@@ -45,6 +45,7 @@ from jsonschema_spark.plans.columns import (
 )
 
 _VIOL_ARR_DDL = VIOLATION_SCHEMA_DDL
+from jsonschema_spark.plans.cache import PlanCache
 from jsonschema_spark.registry import Registry
 
 __all__ = ["VariantPlanCompiler", "VariantCompileError", "validate_variant_column"]
@@ -1286,41 +1287,28 @@ class VariantPlanCompiler:
             valids.append(~(then_bad | else_bad))
 
 
-_PLAN_CACHE: dict = {}
-_PLAN_CACHE_MAX = 32
+_PLAN_CACHE = PlanCache()
 
 
 def _compiled_variant_plan(df, schema: Any, assert_format: bool, max_unroll: int):
     """(violations Column, stages) for `F.col("__variant__")` — compile ONCE
-    per (session, schema, flags), like the reference's Compiler.Compile.
+    per (application, schema, flags), like the reference's Compiler.Compile.
 
-    The expression tree is immutable and column-name-anchored, so it is
-    reusable across DataFrames in the same Spark application; driver-side
-    py4j construction dominates repeated-validation cost for deep schemas
-    (measured ~2s per recursive unroll level), and streaming/microbatch or
-    best-of-N callers would otherwise pay it on every invocation. Keyed by
-    applicationId so a restarted JVM never sees stale JVM object handles;
-    compile FAILURES (VariantCompileError → UDF residue) are not cached.
+    See plans/cache.py: the tree is reusable across DataFrames in the same
+    Spark application (measured ~2s of py4j construction per recursive
+    unroll level). Compile FAILURES (VariantCompileError → UDF residue) are
+    not cached.
     """
     import json as _json
 
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        _json.dumps(schema, sort_keys=True, default=str),
-        assert_format,
-        max_unroll,
-    )
-    hit = _PLAN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    plan = VariantPlanCompiler(schema, assert_format=assert_format, max_unroll=max_unroll)
-    stages: list = []
-    viol = plan.violations_column(F.col("__variant__"), stages=stages)
-    if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-        _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-    entry = (viol, stages)
-    _PLAN_CACHE[key] = entry
-    return entry
+    def build():
+        plan = VariantPlanCompiler(schema, assert_format=assert_format, max_unroll=max_unroll)
+        stages: list = []
+        viol = plan.violations_column(F.col("__variant__"), stages=stages)
+        return viol, stages
+
+    key = (_json.dumps(schema, sort_keys=True, default=str), assert_format, max_unroll)
+    return _PLAN_CACHE.get_or_build(df.sparkSession, key, build)
 
 
 def validate_variant_column(

@@ -37,17 +37,15 @@ def validate_stream(
     """Attach violations + valid columns to a streaming DataFrame.
 
     Stateless per-row projection: works under every trigger including
-    continuous processing; no watermark required."""
-    from jsonschema_spark.plans.columns import SparkPlanCompiler
+    continuous processing; no watermark required. The same cached-plan path
+    as ``validate_dataframe``: a restarted query in the same application
+    reuses the compiled plan."""
+    from jsonschema_spark.plans.columns import validate_dataframe
 
-    plan = SparkPlanCompiler(schema, assert_format=assert_format)
-    stages: list = []
-    v = plan.violations_column(stream_df.schema, stages=stages)
-    out = plan.attach_stages(stream_df, stages)
-    out = out.withColumn(violations_col, v).withColumn(
-        valid_col, F.size(F.col(violations_col)) == 0
+    return validate_dataframe(
+        stream_df, schema, assert_format=assert_format,
+        violations_col=violations_col, valid_col=valid_col,
     )
-    return out.drop(*[n for n, _ in stages]) if stages else out
 
 
 def stream_violation_metrics(

@@ -26,3 +26,21 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def plan_compiles(monkeypatch):
+    """Empty typed-plan cache + a count of SparkPlanCompiler compiles."""
+    from jsonschema_spark.plans import columns
+    from jsonschema_spark.plans.cache import PlanCache
+
+    monkeypatch.setattr(columns, "_PLAN_CACHE", PlanCache())
+    calls = []
+    real = columns.SparkPlanCompiler.violations_column
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(columns.SparkPlanCompiler, "violations_column", counted)
+    return calls

@@ -150,3 +150,58 @@ def test_multiple_of_decimal_semantics_on_doubles(spark):
         .collect()
     }
     assert got == {0.3: True, 0.25: False, 7.5: True, 35.000001: False, None: True}
+
+
+def _violation_rows(df):
+    return sorted(
+        (r["doc_id"], r["v"]["instance_path"], r["v"]["keyword"], r["v"]["code"],
+         tuple(sorted((r["v"]["params"] or {}).items())))
+        for r in df.select("doc_id", F.explode("violations").alias("v")).collect()
+    )
+
+
+def test_plan_cache_key_discriminates(spark, docs, plan_compiles):
+    """Same (schema, input StructType, assert_format) → one compile; any of
+    the three changed → a fresh compile."""
+    from jsonschema_spark.plans.columns import compiled_plan
+
+    first = compiled_plan(spark, docs.schema, DOCS_SCHEMA)
+    assert compiled_plan(spark, docs.schema, DOCS_SCHEMA) is first
+    assert len(plan_compiles) == 1
+    assert compiled_plan(spark, docs.schema, {**DOCS_SCHEMA, "minProperties": 1}) is not first
+    assert len(plan_compiles) == 2
+    assert compiled_plan(spark, docs.select("spans", "doc_id").schema, DOCS_SCHEMA) is not first
+    assert len(plan_compiles) == 3
+    assert compiled_plan(spark, docs.schema, DOCS_SCHEMA, assert_format=False) is not first
+    assert len(plan_compiles) == 4
+    assert compiled_plan(spark, docs.schema, DOCS_SCHEMA) is first
+    assert len(plan_compiles) == 4
+
+
+def test_cached_plan_matches_fresh_compile_on_two_frames(spark, docs, plan_compiles):
+    """One cached plan applied to two different DataFrames gives the same
+    violation rows as an uncached compile of each."""
+    from jsonschema_spark.plans.columns import validate_dataframe
+
+    halves = [docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == k) for k in (0, 1)]
+    for half in halves:
+        plan = SparkPlanCompiler(DOCS_SCHEMA)
+        stages: list = []
+        fresh = plan.violations_column(half.schema, stages=stages)
+        want = plan.attach_stages(half, stages).withColumn("violations", fresh)
+        assert _violation_rows(validate_dataframe(half, DOCS_SCHEMA)) == _violation_rows(want)
+    # two fresh compiles in the loop + one cached compile shared by both halves
+    assert len(plan_compiles) == 3
+
+
+def test_revalidating_validated_output(spark, docs):
+    """validate_dataframe over its own output with the same schema: the stage
+    columns were dropped, so nothing collides, and the rows are unchanged."""
+    from jsonschema_spark.plans.columns import validate_dataframe
+
+    once = validate_dataframe(docs, DOCS_SCHEMA)
+    assert not [c for c in once.columns if c.startswith("__jss_stage")]
+    twice = validate_dataframe(once, DOCS_SCHEMA)
+    assert twice.columns == once.columns
+    assert _violation_rows(twice) == _violation_rows(once)
+    assert twice.filter(~F.col("valid")).count() == once.filter(~F.col("valid")).count() > 0

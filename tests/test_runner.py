@@ -163,3 +163,38 @@ def test_salted_repartition_balances_skew(spark, synth_paths):
     spans = [r["spans"] for r in per_part]
     assert len(spans) == 8
     assert max(spans) < 2.5 * (sum(spans) / len(spans)), spans
+
+
+def test_plan_compiled_once_per_application(spark, synth_paths, tmp_path, plan_compiles):
+    """Every batch of one job, and every batch of a second job in the same
+    session, reuse one compiled plan."""
+    res = ValidationJob(spark, _cfg(synth_paths, str(tmp_path / "a"))).run()
+    assert res["batches_run"] >= 3 and res["complete"]
+    assert len(plan_compiles) == 1
+    res = ValidationJob(spark, _cfg(synth_paths, str(tmp_path / "b"))).run(max_batches=1)
+    assert res["batches_run"] == 1
+    assert len(plan_compiles) == 1
+
+
+def test_lineage_elapsed_covers_whole_batch(spark, synth_paths, tmp_path, monkeypatch):
+    """batch_elapsed_sec includes the reads and the plan, not just the writes."""
+    import time
+
+    real = ValidationJob._load_bucketed
+
+    def slow_load(self, path, buckets):
+        time.sleep(1.0)
+        return real(self, path, buckets)
+
+    monkeypatch.setattr(ValidationJob, "_load_bucketed", slow_load)
+    out = str(tmp_path / "timed")
+    job = ValidationJob(spark, _cfg(synth_paths, out))
+    t0 = time.perf_counter()
+    res = job.run_batch([0, 1])
+    outer = time.perf_counter() - t0
+    # only the staging-dir promotion and the lineage files fall outside;
+    # write-only timing would miss at least the 1 s spent before the writes
+    assert 0 <= outer - res["elapsed"] < 1.0
+    for b in (0, 1):
+        with open(os.path.join(out, "lineage", f"bucket_{b}.json")) as f:
+            assert json.load(f)["batch_elapsed_sec"] == round(res["elapsed"], 3)
