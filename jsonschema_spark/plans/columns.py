@@ -310,10 +310,10 @@ class SparkPlanCompiler:
     def violations_column(
         self,
         df_schema: T.StructType,
-        root: Column | None = None,
         stages: list[tuple[str, Column]] | None = None,
     ) -> Column:
-        """Build the violations array column for rows of ``df_schema``.
+        """Build the violations array column for rows of ``df_schema``, over
+        a root struct of its columns by name.
 
         When ``stages`` is passed, expensive multiply-referenced
         subexpressions (per-element transforms for items summaries) are
@@ -322,8 +322,7 @@ class SparkPlanCompiler:
         from re-inlining them — Catalyst does not CSE non-cheap exprs inside
         one projection, measured 3.4x on variant parse). Without ``stages``
         the plan is still correct, just recomputes those subtrees."""
-        if root is None:
-            root = F.struct(*[F.col(f.name).alias(f.name) for f in df_schema.fields])
+        root = F.struct(*[F.col(f.name).alias(f.name) for f in df_schema.fields])
         self._stages = stages
         self._scope = []
         try:
