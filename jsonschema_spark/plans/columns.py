@@ -278,6 +278,9 @@ class SparkPlanCompiler:
     ) -> None:
         from jsonschema_spark.dialects import normalize_schema
 
+        # apply() hands the caller's schema to compiled_plan, which normalizes
+        # it itself: normalize_schema is not idempotent on legacy dialects
+        self._source_schema = schema
         schema = normalize_schema(schema)  # accept legacy dialects via $schema
         self.schema = schema
         self.assert_format = assert_format
@@ -372,7 +375,7 @@ class SparkPlanCompiler:
         """df + [violations, valid] columns. Narrow projections, no shuffle.
         The plan comes from the application-scoped cache (``compiled_plan``)."""
         return _apply_plan(
-            df, self.schema, assert_format=self.assert_format,
+            df, self._source_schema, assert_format=self.assert_format,
             assert_content=self.assert_content,
             violations_col=violations_col, valid_col=valid_col,
         )

@@ -22,10 +22,11 @@ resumes by skipping buckets with lineage markers; outputs are idempotent
 (per-bucket dirs are overwritten, never appended).
 
 Compile once: the typed constraint plan (plans.columns) is compiled once per
-Spark application, not once per batch. ``compiled_plan`` caches the
-violations Column and its stages under (SparkContext ``applicationId``,
-``json.dumps(schema, sort_keys=True)``, input ``StructType.json()``,
-``assert_format``), FIFO-bounded at 32 entries. Every batch of every job in
+Spark application, not once per batch. ``plans.columns.compiled_plan``
+(whose docstring defines the key) caches the violations Column and its
+stages under (SparkContext ``applicationId``, ``json.dumps(schema,
+sort_keys=True)``, input ``StructType.json()``, ``assert_format``,
+``assert_content``), FIFO-bounded at 32 entries. Every batch of every job in
 the application with that schema and input shape reuses one Column tree;
 only the stage projection and the bucket-specific DataFrames are rebuilt per
 batch. A restarted SparkContext has a new applicationId and compiles anew.

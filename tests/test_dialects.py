@@ -117,6 +117,40 @@ def test_typed_planner_accepts_draft7(spark):
     assert got == {1: True, 2: False}
 
 
+def test_typed_planner_apply_matches_validate_dataframe_on_draft7(spark):
+    """SparkPlanCompiler.apply and validate_dataframe normalize a legacy
+    schema once each way: dependencies and array-form items with
+    additionalItems keep their draft-07 meaning through both."""
+    from jsonschema_spark.plans import SparkPlanCompiler
+    from jsonschema_spark.plans.columns import validate_dataframe
+
+    df = spark.createDataFrame(
+        [(1, 1, 2, ["ab", "x"]), (2, 1, None, ["x"]), (3, None, None, ["x", "yz"]),
+         (4, None, None, ["abc"])],
+        "id int, a int, b int, t array<string>",
+    )
+    schema = {
+        "$schema": "http://json-schema.org/draft-07/schema#",
+        "dependencies": {"a": ["b"]},
+        "properties": {
+            "t": {
+                "items": [{"type": "string"}],
+                "additionalItems": {"maxLength": 1},
+            }
+        },
+    }
+
+    def rows(out):
+        return sorted(
+            (r["id"], r["valid"], tuple(sorted((v["keyword"], v["code"]) for v in r["violations"])))
+            for r in out.collect()
+        )
+
+    applied = rows(SparkPlanCompiler(schema).apply(df))
+    assert applied == rows(validate_dataframe(df, schema))
+    assert {i: ok for i, ok, _ in applied} == {1: True, 2: False, 3: False, 4: True}
+
+
 def test_embedded_legacy_resource_under_modern_root():
     """A draft-7 resource embedded inline under a 2020-12 root (nested
     $schema) is normalized per-resource — the reference switches dialect at
